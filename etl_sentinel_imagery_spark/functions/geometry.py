@@ -17,7 +17,6 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType
 
@@ -574,14 +573,6 @@ def point_in_polygon(px: float, py: float, ring: np.ndarray) -> bool:
 
 
 # --- Spark-facing vectorized UDFs ----------------------------------------
-def wkt_area_udf() -> Column:
-    @F.pandas_udf(DoubleType())
-    def _area(wkts: pd.Series) -> pd.Series:
-        return wkts.map(lambda w: shoelace_area(parse_wkt_polygon(w)))
-
-    return _area
-
-
 def make_coverage_ratio_udf(aoi_wkt: str):
     """UDF: exact area(footprint ∩ AOI) / area(AOI) for each footprint WKT.
 

@@ -87,11 +87,6 @@ def polyhash_sql(expr: str) -> str:
     )
 
 
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One universal-hash permutation (a*h + b) mod p over a token hash."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(HASH_MOD)
-
-
 def word_ngrams(c: Column | str, n: int) -> Column:
     """Distinct word n-grams as '_'-joined strings (order-insensitive set).
 

@@ -243,12 +243,6 @@ def best_product_direct(
     return _product_record(best, bands)
 
 
-def best_product(ranked: DataFrame, bands: list[str]) -> DataFrame:
-    """O3+P2: the winning row of an already-ranked frame, projected to
-    the reference's product record (imagery_store.py:259-269)."""
-    return _product_record(ranked.filter(F.col("rank") == 1), bands)
-
-
 def _product_record(best: DataFrame, bands: list[str]) -> DataFrame:
     """P2 projection (imagery_store.py:259-269): uuid, name, s3path,
     tile, product_date ([:10] truncate), cloudcoverage, bands, num_bands,

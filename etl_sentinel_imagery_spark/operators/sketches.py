@@ -217,18 +217,6 @@ def hll_estimate(col: Column | str, p: int = HLL_P) -> Column:
     ).otherwise(raw)
 
 
-def distinct_rollup(
-    df: DataFrame,
-    fine_cols: list[str],
-    key_col: str,
-) -> DataFrame:
-    """The end-to-end rollup pattern: sketch at the FINE grain once
-    (e.g. per day × segment); callers then merge to any coarser slice
-    with ``groupBy(coarse).agg(hll_merge_agg('hll'))`` + hll_estimate —
-    never re-reading raw data. Returns (fine_cols..., hll)."""
-    return hll_sketch(df, fine_cols, key_col)
-
-
 def exact_error_bound(n_distinct: int, p: int = HLL_P) -> float:
     """±3σ relative error bound for a given precision (for tests/monitors)."""
     return 3 * 1.04 / math.sqrt(1 << p)

@@ -2,10 +2,10 @@
 deletes (copy-on-write AND merge-on-read deletion vectors), and
 compaction over plain parquet.
 
-The engine's maintenance ops (compaction, targeted delete) use a
-crash-ordered swap that is safe but exposes a TRANSIENT WINDOW where a
-directory-listing reader sees old+new files together (documented in
-operators.maintenance). The lake-format answer (Delta/Iceberg) is a
+Maintenance on a plain parquet directory (compaction, targeted delete)
+needs a crash-ordered file swap, which is safe but exposes a TRANSIENT
+WINDOW where a directory-listing reader sees old+new files together.
+The lake-format answer (Delta/Iceberg) is a
 manifest log: the set of live files is a VERSIONED JSON manifest, the
 current version is an atomic pointer, and readers resolve the file
 list from a manifest — so every reader sees exactly one committed
@@ -1072,15 +1072,6 @@ def _check_copy_ledger_clear(
             f"concurrent COPY INTO (first: {dup[0]!r}); re-resolve "
             "the landing dir against the fresh ledger"
         )
-
-
-def _merged_copy_ledger(
-    table_dir: str, parent: int, copy_files: dict | None
-) -> dict:
-    led = resolve_copy_ledger(table_dir, parent)
-    if copy_files:
-        led.update(copy_files["files"])
-    return _prune_ledger(table_dir, led)
 
 
 def _prune_ledger(table_dir: str, led: dict) -> dict:
@@ -4830,7 +4821,8 @@ def _mmh3_int(value: int, seed: int = 42) -> int:
     the 4-byte int, seed 42, as a SIGNED int32. Pure-Python twin so the
     driver can pre-compute which repartition slot an int lands in
     (``pmod(hash(x), n)`` is HashPartitioning's routing function);
-    parity with the JVM is pinned in ``tests/test_maintenance.py``."""
+    parity with the JVM is pinned in
+    ``tests/test_txlog_round6.py::test_mmh3_parity_with_spark_hash``."""
     c1, c2 = 0xCC9E2D51, 0x1B873593
     k = (value & 0xFFFFFFFF) * c1 & 0xFFFFFFFF
     k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF

@@ -461,25 +461,12 @@ def build_index_from_table(
         **build_kwargs,
     )
     if build_kwargs.get("hnsw", True):
-        from etl_sentinel_imagery_spark.operators.hnsw import (
-            DEFAULT_SHARDS,
-        )
-
         # versioned repoint for the freshly-built graph too, so the
-        # first sync's readers already resolve through the manifest
+        # first sync's readers already resolve through the manifest;
+        # build_serving_index has already written the graph's meta
         publish_layout_manifest(
             _hnsw_dir(index_dir),
             list_layout_data_files(_hnsw_dir(index_dir)),
-        )
-        _write_hnsw_meta(
-            index_dir,
-            {
-                "n_shards": int(
-                    build_kwargs.get("hnsw_shards", DEFAULT_SHARDS)
-                ),
-                "built_nodes": snap.count(),
-                "churn": 0,
-            },
         )
     if build_kwargs.get("pq", False):
         _write_pq_meta(

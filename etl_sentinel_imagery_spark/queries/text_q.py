@@ -105,8 +105,8 @@ def _text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full per-document analysis pass in ONE narrow projection:
     quality stats + score, stopword-ratio language guess, BPE-ish regex
     token counts, the binary-payload hashes (byte length, sha256,
-    md5 — the opaque-media-column plumbing of operators.multimodal at its
-    oracle-checkable core), the training-data hygiene columns (PII
+    md5 — opaque-media-column plumbing at its oracle-checkable core),
+    the training-data hygiene columns (PII
     match count, scrubbed-text and normalized-text content hashes), and
     the deterministic train/val/test assignment + 10% sample membership
     (operators.sampling hash buckets — reproducible across engines and

@@ -307,8 +307,14 @@ def test_sync_maintains_hnsw_tier_end_to_end(spark, tmp_path):
     init_table(spark, t, _vecs(spark, range(60)).coalesce(2))
     idx = str(tmp_path / "idxh")
     build_index_from_table(
-        spark, t, idx, n_centroids=4, hnsw=True, hnsw_shards=2
+        spark, t, idx, n_centroids=4, hnsw=True, hnsw_shards=3
     )
+    # the build records the graph's modulus and size exactly once
+    from etl_sentinel_imagery_spark.plans.serving import _read_hnsw_meta
+
+    meta = _read_hnsw_meta(idx)
+    assert meta["n_shards"] == 3
+    assert meta["built_nodes"] == snapshot(spark, t).count() == 60
 
     append(spark, t, _vecs(spark, range(200, 210)).coalesce(1))
     delete_rows_dv(spark, t, "vec_id", [3, 5, 203])

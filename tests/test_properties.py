@@ -142,35 +142,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
 
 
 # --- round-4 kernels: driver-side properties (no Spark per example) -------
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="abcdef", min_size=1, max_size=7),
-        min_size=1,
-        max_size=25,
-    ),
-    st.integers(min_value=5, max_value=60),
-)
-def test_unigram_lossless_for_any_corpus(words, vocab_size):
-    """The unigram tokenizer must encode ANY word (seen or not)
-    losslessly under ANY vocabulary budget — the char floor guarantees
-    it; hypothesis hunts corner corpora (repeats, single chars,
-    all-identical words)."""
-    from collections import Counter
-
-    from etl_sentinel_imagery_spark.operators.unigram_lm import (
-        train_unigram,
-        unigram_encode_word,
-    )
-
-    model = train_unigram(
-        list(Counter(words).items()), vocab_size=vocab_size,
-        n_em=2, prune_rounds=2,
-    )
-    for w in words + ["zzz", "abcdefабв"[:6]]:
-        assert "".join(unigram_encode_word(w, model)) == w
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     st.lists(st.integers(min_value=0, max_value=30), min_size=1, max_size=200)
@@ -238,27 +209,3 @@ def test_cm_sketch_math_never_underestimates(keys, log_w):
     for k in set(str(x) for x in keys) | {"absent"}:
         est = min(grid[j][cell(k, j)] for j in range(d))
         assert est >= true.get(k, 0)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=100),
-    st.integers(min_value=0, max_value=2**40),
-    st.integers(min_value=0, max_value=2**40),
-)
-def test_dhash_band_pigeonhole(dim_seed, h1, h2):
-    """Any two 64-bit hashes within Hamming distance 3 share at least
-    one exact 16-bit band — the exactness guarantee dhash_near_pairs
-    relies on (checked constructively: flip <=3 random bits)."""
-    import random
-
-    rng = random.Random(dim_seed)
-    base = (h1 << 24) ^ h2
-    flipped = base
-    for _ in range(rng.randint(0, 3)):
-        flipped ^= 1 << rng.randrange(64)
-    bands_a = [(base >> (16 * j)) & 0xFFFF for j in range(4)]
-    bands_b = [(flipped >> (16 * j)) & 0xFFFF for j in range(4)]
-    dist = bin((base ^ flipped) & ((1 << 64) - 1)).count("1")
-    if dist <= 3:
-        assert any(a == b for a, b in zip(bands_a, bands_b))

@@ -102,3 +102,42 @@ def test_mosaic_nodata_holes_fillable_by_later():
     out, _ = mosaic_first([(a, ta), (b, ta)])
     # later raster fills ONLY the nodata holes
     assert out[0].tolist() == [[3, 5], [5, 3]]
+
+
+def test_mosaic_stacks_first_wins_is_shuffle_independent(spark):
+    """R5 as a Spark stage: the grouped mosaic equals ``mosaic_first``
+    over the product_id-sorted inputs, and reversing plus repartitioning
+    the input rows (a different shuffle arrival order) changes nothing."""
+    from etl_sentinel_imagery_spark.operators.raster import (
+        STACK_SCHEMA,
+        mosaic_stacks,
+    )
+
+    ta = (10.0, 0.0, 0.0, 0.0, -10.0, 30.0)  # cols 0-2, rows 0-2
+    tb = (10.0, 0.0, 10.0, 0.0, -10.0, 20.0)  # cols 1-3, rows 1-3
+    a = np.arange(1, 19, dtype=np.int64).reshape(2, 3, 3)
+    a[:, 1, 2] = 0  # a nodata hole inside the overlap
+    b = np.arange(101, 119, dtype=np.int64).reshape(2, 3, 3)
+    stacks = {"p-a": (a, ta), "p-b": (b, tb)}
+    rows = [
+        (pid, ["B02", "B03"], 3, 3, pix.tolist(), t, "EPSG:32631", 0)
+        for pid, (pix, t) in sorted(stacks.items(), reverse=True)
+    ]
+    want, want_t = mosaic_first([stacks["p-a"], stacks["p-b"]])
+    # the overlap keeps p-a's pixels and p-b fills only p-a's hole
+    assert want[0, 1, 1] == a[0, 1, 1] and want[0, 1, 2] == b[0, 0, 1]
+
+    def run(df):
+        (r,) = mosaic_stacks(df).collect()
+        t = r["transform"]
+        return (
+            r["n_inputs"], r["bands"], np.array(r["pixels"]),
+            (t["a"], t["b"], t["c"], t["d"], t["e"], t["f"]),
+        )
+
+    fwd = run(spark.createDataFrame(rows, STACK_SCHEMA).repartition(2))
+    rev = run(spark.createDataFrame(rows[::-1], STACK_SCHEMA).repartition(3))
+    for n, bands, pix, t in (fwd, rev):
+        assert n == 2 and bands == ["B02", "B03"]
+        assert t == want_t
+        np.testing.assert_array_equal(pix, want)
