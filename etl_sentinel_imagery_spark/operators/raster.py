@@ -115,6 +115,46 @@ def resample_nearest(
     return out
 
 
+def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Axis-aligned nearest-neighbor resize of (H, W[, C]) — pixel-center
+    sampling (source index = floor((i + 0.5) · in/out)), the same
+    convention :func:`resample_nearest` uses for warps. Dtype-preserving;
+    an integer upscale factor reproduces ``np.repeat`` exactly."""
+    h, w = arr.shape[:2]
+    rs = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(int), h - 1)
+    cs = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(int), w - 1)
+    return arr[rs][:, cs]
+
+
+def resize_bilinear(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Bilinear resize of (H, W[, C]) with half-pixel-center alignment
+    and edge clamp (the PIL/OpenCV default convention: source coordinate
+    = (i + 0.5) · in/out − 0.5). Interpolates in float64; integer dtypes
+    round half-to-even back (np.rint), floats keep their dtype. A
+    same-size call is the identity (weights collapse to 0)."""
+    h, w = arr.shape[:2]
+    a = arr.astype(np.float64)
+    ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
+    xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
+    y0f, x0f = np.floor(ys), np.floor(xs)
+    wy, wx = ys - y0f, xs - x0f
+    y0 = np.clip(y0f.astype(int), 0, h - 1)
+    y1 = np.clip(y0f.astype(int) + 1, 0, h - 1)
+    x0 = np.clip(x0f.astype(int), 0, w - 1)
+    x1 = np.clip(x0f.astype(int) + 1, 0, w - 1)
+    # gather four corners on the (out_h, out_w) grid, then lerp. The
+    # extra trailing dims broadcast over an optional channel axis.
+    exp = (...,) + (None,) * (arr.ndim - 2)
+    wy_, wx_ = wy[:, None][exp], wx[None, :][exp]
+    top = a[y0][:, x0] * (1 - wx_) + a[y0][:, x1] * wx_
+    bot = a[y1][:, x0] * (1 - wx_) + a[y1][:, x1] * wx_
+    out = top * (1 - wy_) + bot * wy_
+    if np.issubdtype(arr.dtype, np.integer):
+        info = np.iinfo(arr.dtype)
+        return np.clip(np.rint(out), info.min, info.max).astype(arr.dtype)
+    return out.astype(arr.dtype)
+
+
 def default_wgs84_grid(
     transform: Affine, shape: tuple[int, int], to_wgs84: Callable, n_res: int = None
 ) -> tuple[Affine, tuple[int, int]]:
